@@ -17,6 +17,7 @@ never used by bench.py or the driver).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -41,6 +42,14 @@ DEFAULT_QUERIES = [
     "bgp_construct",
     "sparql_subquery",
 ]
+
+
+def scaled_cache_dir(sf_dir: str, scale: int) -> str:
+    """Where the ``--scale`` probe caches its unioned tables: keyed by the
+    scale AND a digest of the resolved source SF dir, so a run against a
+    different ``--sf-dir`` never reuses another SF's scaled copy."""
+    digest = hashlib.sha1(os.path.realpath(sf_dir).encode()).hexdigest()[:12]
+    return f"/tmp/sg_scaled_{scale}x_{digest}"
 
 
 def main() -> None:
@@ -70,7 +79,7 @@ def main() -> None:
 
         from pyspark.sql import functions as F
 
-        scaled = f"/tmp/sg_scaled_{args.scale}x"
+        scaled = scaled_cache_dir(sf_dir, args.scale)
         if not os.path.exists(os.path.join(scaled, "_DONE")):
             shutil.rmtree(scaled, ignore_errors=True)
             os.makedirs(scaled, exist_ok=True)

@@ -84,10 +84,6 @@ def truecase_series(words: pd.Series) -> pd.Series:
     return words.map(lambda w: _truecase_word(w) if isinstance(w, str) else w)
 
 
-def truecase_tokens(tokens: list[str]) -> list[str]:
-    return [_truecase_word(w) for w in tokens]
-
-
 def tokenize_text(text: str) -> list[str]:
     """Split one turn's text into word forms (S4, UDPipe-lite)."""
     if not text:
@@ -203,15 +199,3 @@ def conllu_tokens(conllu_text: str) -> list[str]:
             continue
         tokens.append(form)
     return tokens
-
-
-def conllu_tokens_series(texts: pd.Series) -> pd.Series:
-    """Vectorized CoNLL-U → flattened token lists (for pandas_udf use)."""
-    return texts.map(lambda t: conllu_tokens(t) if isinstance(t, str) else [])
-
-
-def normalize_turn_text(text: str) -> str:
-    """Whole-turn NFC normalization (server does this per request,
-    nametag3_server.py:565). Applied before tokenization so the
-    per-turn text-equality invariant is stated post-NFC."""
-    return unicodedata.normalize("NFC", text) if isinstance(text, str) else text

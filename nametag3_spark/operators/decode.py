@@ -142,11 +142,3 @@ def decode_spans_udf(label_stacks: pd.Series) -> pd.Series:
         if stacks is not None
         else []
     )
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def postprocess_udf(label_stacks: pd.Series) -> pd.Series:
-    """Arrow-batched postprocess: stacked labels → clean stacked BIO labels."""
-    return label_stacks.map(
-        lambda stacks: postprocess_stacks(list(stacks)) if stacks is not None else []
-    )

@@ -8,6 +8,8 @@ functions (no Python in the hot path):
 * MinHash-LSH: word-shingle signatures via ``xxhash64`` with per-
   permutation salts, banded; doc pairs sharing a band bucket are
   candidates, verified by true shingle Jaccard. One shuffle on band keys.
+  Its kernel (``_hashed_sigs`` + ``_band_rows``) is the package's only
+  MinHash code: the entity linker runs it over char shingles.
 * SimHash: 64-bit sign-aggregated token hashes; near-dups = identical
   simhash prefix buckets (Hamming verification on candidates).
 * n-gram Jaccard: direct verified similarity for candidate pairs.
@@ -22,9 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nametag3_spark.operators.skew import spread_if_narrow
+
 N_HASHES = 16
 N_BANDS = 4
-ROWS_PER_BAND = N_HASHES // N_BANDS
 
 # Modulus for the "portable" hash family: 2^31-1 (Mersenne prime). Every
 # intermediate of (a*h + b) % P with a, h, b < P stays under 2^62, so the
@@ -112,73 +115,6 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def minhash_signature_expr(
-    hashed_col, n_hashes: int = N_HASHES, portable: bool = False
-):
-    """MinHash signature over PRE-HASHED shingles (array<long>):
-    ``transform(0..n-1, p -> array_min(transform(hs, h -> xxhash64(h, p))))``.
-
-    Two-level hashing: each shingle STRING is hashed once upstream
-    (``_hs = transform(sh, s -> xxhash64(s))``); the n permutations mix
-    the 8-byte hash, not the string — n× less string hashing, the
-    standard MinHash trick. One nested expression, not n parallel
-    subtrees: a flat ``array(min0, min1, …)`` codegens an n×-bigger
-    method and dominates compile time. (The inner lambda takes ONE arg on
-    purpose: 2-arg F.transform lambdas mean (element, index), which would
-    rebind the permutation id.)
-
-    ``portable=True`` swaps the xxhash64 mixer for the classic affine
-    permutation family ``(a_p*h + b_p) % P`` over P=2^31-1 — byte-for-
-    byte reproducible in DuckDB SQL, so the whole signature (and the
-    banding built on it) gets an oracle twin. xxhash64 stays the 100 TB
-    fast path (JVM intrinsic, no modular arithmetic)."""
-    if portable:
-        P = PORTABLE_PRIME
-
-        def perm(p):
-            # sequence() yields 32-bit ints — widen BEFORE multiplying,
-            # or (p+1)*1103515245 overflows int under ANSI mode
-            p64 = p.cast("long")
-            a = ((p64 + 1) * F.lit(1103515245) + 12345) % P
-            b = ((p64 + 1) * F.lit(12345) + 67890) % P
-            return lambda h: (a * h + b) % P
-
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-            lambda p: F.array_min(F.transform(hashed_col, perm(p))),
-        )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda p: F.array_min(F.transform(hashed_col, lambda h: F.xxhash64(h, p))),
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    hs = F.transform(F.col("_sh"), lambda s: F.xxhash64(s))
-    return (
-        docs.withColumn("_sh", _word_shingles(text_col, k))
-        .where(F.size("_sh") > 0)
-        .select(
-            F.col(id_col),
-            F.col("_sh"),
-            minhash_signature_expr(hs).alias("sig"),
-        )
-    )
-
-
-def _parallelize_if_narrow(df: DataFrame, key_col: str) -> DataFrame:
-    """Repartition by key iff the input has fewer partitions than the
-    cluster has slots (e.g. a single small parquet file): the downstream
-    shingle/signature projection is CPU-bound and must not serialize on
-    one task. At warehouse scale the input is already wide → no-op, no
-    shuffle."""
-    from nametag3_spark.operators.skew import spread_if_narrow
-
-    return spread_if_narrow(df, key_col)
-
-
 def _shingle_rows(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
@@ -193,11 +129,15 @@ def _shingle_rows(
     Duplicate shingle occurrences are harmless downstream: signature
     minima ignore multiplicity and ``collect_set`` dedups the verify
     payloads, so results are bit-identical to the distinct-array form
-    (``array_intersect``/``array_union`` deduplicate anyway)."""
+    (``array_intersect``/``array_union`` deduplicate anyway).
+
+    The shingle/signature projection is CPU-bound, so a narrow corpus
+    (e.g. one small parquet file) is spread by doc id first; a wide one
+    passes through without a shuffle."""
     words = F.split(F.lower(F.col(text_col)), r"\s+")
     shingle = F.concat_ws(" ", F.slice(F.col("_w"), F.col("_i") + 1, k))
     return (
-        _parallelize_if_narrow(docs, id_col)
+        spread_if_narrow(docs, id_col)
         .select(F.col(id_col), words.alias("_w"))
         .select(
             F.col(id_col),
@@ -210,50 +150,52 @@ def _shingle_rows(
     )
 
 
-def _shingle_hash_rows(
-    docs: DataFrame, id_col: str, text_col: str, k: int, portable: bool
-) -> DataFrame:
-    """(id, _h) rows: ``_shingle_rows`` with each shingle hashed by the
-    requested family (xxhash64 fast path / md5-affine portable path) as a
-    plain codegen'd expression."""
-    if portable:
-        h = (
-            F.conv(F.substring(F.md5("_s"), 1, 15), 16, 10).cast("bigint")
-            % PORTABLE_PRIME
-        )
-    else:
-        h = F.xxhash64("_s")
-    return _shingle_rows(docs, id_col, text_col, k).select(
-        F.col(id_col), h.alias("_h")
+def _char_shingle_rows(df: DataFrame, text_col: str, k: int) -> DataFrame:
+    """(df's columns…, _s) rows: one row per char-k shingle of
+    ``'^' + text + '$'`` — the entity linker's shingle source, same
+    explode shape as ``_shingle_rows``. A padded form shorter than k is
+    its own single shingle. No narrow-input spread:
+    linking's inputs are a distinct surface set or the small gazetteer."""
+    padded = F.concat(F.lit("^"), F.col(text_col), F.lit("$"))
+    pos = F.explode(
+        F.sequence(F.lit(1), F.greatest(F.length(padded) - k + 1, F.lit(1)))
+    )
+    return df.select("*", pos.alias("_i")).select(
+        *df.columns, padded.substr(F.col("_i"), F.lit(k)).alias("_s")
     )
 
 
 def _portable_perm_consts(p: int) -> tuple[int, int]:
-    """The classic affine family's (a_p, b_p) — same arithmetic as the
-    Spark-expression form in ``minhash_signature_expr`` (and the DuckDB
-    oracle twins), precomputed driver-side so the per-row work is one
-    multiply-add-mod instead of re-deriving the constants per element."""
+    """The classic affine family's (a_p, b_p) for permutation ``p`` over
+    P=2^31-1 — the same arithmetic as the DuckDB oracle twins, precomputed
+    driver-side so the per-row work is one multiply-add-mod."""
     a = ((p + 1) * 1103515245 + 12345) % PORTABLE_PRIME
     b = ((p + 1) * 12345 + 67890) % PORTABLE_PRIME
     return a, b
 
 
 def _hashed_sigs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    portable: bool,
-    n_hashes: int = N_HASHES,
+    rows: DataFrame,
+    id_cols: list[str],
+    n_hashes: int,
+    portable: bool = False,
 ) -> DataFrame:
-    """One row per doc: (id, _hs: distinct shingle-hash set, _m0.._m{n-1}:
-    MinHash signature minima) — computed in ONE codegen'd hash aggregate
-    over the exploded shingle rows. The per-permutation hash runs as a
-    plain expression inside partial (map-side) aggregation, so the heavy
-    hashing is spread over every scan/repartition task and the exchange
-    carries only one pre-aggregated row per (doc, partition)."""
-    rows = _shingle_hash_rows(docs, id_col, text_col, k, portable)
+    """The MinHash kernel: shingle rows ``(id_cols…, _s)`` → one row per
+    id: (id_cols…, _hs: distinct shingle-hash set, _m0.._m{n-1}: MinHash
+    signature minima) — computed in ONE codegen'd hash aggregate.
+
+    Two-level hashing: each shingle string is hashed once (xxhash64, or
+    md5 → mod P for the DuckDB-reproducible ``portable`` family); the n
+    permutations mix the 8-byte hash, not the string. The per-permutation
+    hash runs as a plain expression inside partial (map-side)
+    aggregation, so the heavy hashing is spread over every scan task and
+    the exchange carries only one pre-aggregated row per (id, partition).
+    """
     if portable:
+        h = (
+            F.conv(F.substring(F.md5("_s"), 1, 15), 16, 10).cast("bigint")
+            % PORTABLE_PRIME
+        )
         mins = []
         for p in range(n_hashes):
             a, b = _portable_perm_consts(p)
@@ -262,13 +204,57 @@ def _hashed_sigs(
                 .alias(f"_m{p}")
             )
     else:
+        h = F.xxhash64("_s")
         mins = [
             F.min(F.xxhash64(F.col("_h"), F.lit(p))).alias(f"_m{p}")
             for p in range(n_hashes)
         ]
-    return rows.groupBy(id_col).agg(
-        F.collect_set("_h").alias("_hs"), *mins
+    return (
+        rows.select(*id_cols, h.alias("_h"))
+        .groupBy(*id_cols)
+        .agg(F.collect_set("_h").alias("_hs"), *mins)
     )
+
+
+def _band_rows(
+    hashed: DataFrame,
+    cols: list[str],
+    n_hashes: int,
+    n_bands: int,
+    portable: bool = False,
+) -> DataFrame:
+    """LSH banding of ``_hashed_sigs`` output: (cols…, band_idx,
+    band_hash), ``n_bands`` rows per input row, each band hashing
+    ``n_hashes // n_bands`` consecutive signature minima."""
+    rows_per_band = n_hashes // n_bands
+
+    def band_hash(b: int):
+        rows = [
+            F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)
+        ]
+        if portable:
+            acc = rows[0]
+            for m in rows[1:]:
+                acc = (acc * 31 + m) % PORTABLE_PRIME
+            return acc
+        return F.xxhash64(*rows)
+
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_idx"), band_hash(b).alias("band_hash")
+            )
+            for b in range(n_bands)
+        ]
+    )
+    return hashed.select(*cols, F.explode(bands).alias("band")).select(
+        *cols, "band.band_idx", "band.band_hash"
+    )
+
+
+def _jaccard(a: str, b: str):
+    """Jaccard similarity of two set-valued array columns."""
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
 
 def minhash_lsh_pairs(
@@ -316,34 +302,12 @@ def minhash_lsh_pairs(
     # one codegen'd pass: shingle rows → per-doc (hash set, 16 minima).
     # ``hashed`` (the verify payload + signature columns) is the only
     # corpus-scale intermediate and feeds three branches, so it persists.
-    hashed = _persist(_hashed_sigs(docs, id_col, text_col, k, portable))
-
-    def band_hash(b: int):
-        rows = [
-            F.col(f"_m{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)
-        ]
-        if portable:
-            acc = rows[0]
-            for m in rows[1:]:
-                acc = (acc * 31 + m) % PORTABLE_PRIME
-            return acc
-        return F.xxhash64(*rows)
-
-    bands = hashed.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        band_hash(b).alias("band_hash"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_hash")
-    bands = _persist(bands)
+    hashed = _persist(
+        _hashed_sigs(
+            _shingle_rows(docs, id_col, text_col, k), [id_col], N_HASHES, portable
+        )
+    )
+    bands = _persist(_band_rows(hashed, [id_col], N_HASHES, N_BANDS, portable))
 
     hot = (
         bands.groupBy("band_idx", "band_hash")
@@ -367,11 +331,7 @@ def minhash_lsh_pairs(
     return (
         cands.join(sh_a, "id_a")
         .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_hs_a", "_hs_b"))
-            / F.size(F.array_union("_hs_a", "_hs_b")),
-        )
+        .withColumn("jaccard", _jaccard("_hs_a", "_hs_b"))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -421,11 +381,7 @@ def jaccard_pairs_exact(
     return (
         cands.join(sh_a, "id_a")
         .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_sh_a", "_sh_b"))
-            / F.size(F.array_union("_sh_a", "_sh_b")),
-        )
+        .withColumn("jaccard", _jaccard("_sh_a", "_sh_b"))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )

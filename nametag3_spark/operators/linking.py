@@ -8,17 +8,25 @@ Two tiers, per the north rule:
    upstream).
 2. **MinHash-LSH blocking** for fuzzy candidates — character-shingle
    MinHash signatures, banded; mentions and aliases that share a band
-   bucket become candidate pairs, verified by Jaccard. Implemented with
-   built-in SQL functions (``xxhash64`` with per-permutation seeds +
-   ``groupBy`` on band keys), NOT a Python loop, so it scales: the
-   candidate join is an equi-join on (band_idx, band_hash) that AQE can
-   split on skew.
+   bucket become candidate pairs, verified by Jaccard. The signatures and
+   bands come from the one MinHash kernel in ``dedup.py``
+   (``_hashed_sigs`` / ``_band_rows``: explode shingle rows, one
+   codegen'd hash aggregate), run here with linking's own 12 hashes in 4
+   bands over char-3 shingles. No Python and no interpreted lambdas; the
+   candidate join is a broadcast equi-join on (band_idx, band_hash).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from nametag3_spark.operators.dedup import (
+    _band_rows,
+    _char_shingle_rows,
+    _hashed_sigs,
+    _jaccard,
+)
 
 N_HASHES = 12
 N_BANDS = 4  # rows per band = N_HASHES / N_BANDS
@@ -47,50 +55,6 @@ def link_exact(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
     ).drop("alias_norm", "entity_type")
 
 
-def _shingles(col: str):
-    """char-3-gram shingles of a normalized string, as array<string>."""
-    # sliding window via sequence + substring — stays JVM-side
-    padded = F.concat(F.lit("^"), F.col(col), F.lit("$"))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(padded) - SHINGLE_K + 1, F.lit(1))),
-            lambda i: padded.substr(i, F.lit(SHINGLE_K)),
-        )
-    )
-
-
-def minhash_signature(df: DataFrame, text_col: str, out_col: str = "sig") -> DataFrame:
-    """array<bigint> MinHash signature over char shingles — pure SQL fns,
-    one nested transform (see dedup.minhash_signature_expr). Two-level
-    hashing: each shingle string is hashed once; the permutations mix the
-    8-byte hash, not the string."""
-    from nametag3_spark.operators.dedup import minhash_signature_expr
-
-    shingled = df.withColumn("_sh", _shingles(text_col))
-    hashed = F.transform(F.col("_sh"), lambda s: F.xxhash64(s))
-    return shingled.withColumn(
-        out_col, minhash_signature_expr(hashed, N_HASHES)
-    ).drop("_sh")
-
-
-def _banded(df: DataFrame, id_cols: list[str]) -> DataFrame:
-    rows_per_band = N_HASHES // N_BANDS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.xxhash64(
-                    *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                ).alias("band_hash"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    return df.select(*id_cols, F.explode(bands).alias("band")).select(
-        *id_cols, F.col("band.band_idx"), F.col("band.band_hash")
-    )
-
-
 def lsh_candidates(
     mentions: DataFrame,
     gazetteer: DataFrame,
@@ -102,36 +66,40 @@ def lsh_candidates(
     are deduped FIRST (``groupBy mention_norm``) so head entities with
     millions of identical mentions cost one signature, not millions —
     the main skew lever at 100 TB.
+
+    Both sides run dedup's MinHash kernel over char shingles. Each band
+    row carries its shingle-hash set ``_hs``, so Jaccard is computed and
+    filtered right on the broadcast band-join output — no array crosses
+    an exchange and nothing joins back by surface.
     """
-    distinct_mentions = mentions.select("mention_norm").distinct()
-    m_sig = minhash_signature(distinct_mentions, "mention_norm")
-    g_sig = minhash_signature(
-        gazetteer.select("entity_id", "alias_norm").distinct(), "alias_norm"
-    )
 
-    m_bands = _banded(m_sig, ["mention_norm"])
-    g_bands = _banded(g_sig, ["entity_id", "alias_norm"])
+    def bands(df: DataFrame, ids: list[str], text_col: str, hs: str) -> DataFrame:
+        sigs = _hashed_sigs(
+            _char_shingle_rows(df, text_col, SHINGLE_K), ids, N_HASHES
+        ).withColumnRenamed("_hs", hs)
+        return _band_rows(sigs, [*ids, hs], N_HASHES, N_BANDS)
 
-    cands = (
-        m_bands.join(
-            F.broadcast(g_bands), ["band_idx", "band_hash"]
-        )  # gazetteer side stays broadcastable
-        .select("mention_norm", "entity_id", "alias_norm")
-        .distinct()
+    m_bands = bands(
+        mentions.select("mention_norm").distinct(),
+        ["mention_norm"], "mention_norm", "_hs_m",
     )
-    # verify with true Jaccard on shingle sets (JVM-side array ops)
-    verified = (
-        cands.withColumn("_ms", _shingles("mention_norm"))
-        .withColumn("_as", _shingles("alias_norm"))
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_ms", "_as"))
-            / F.size(F.array_union("_ms", "_as")),
+    g_bands = bands(
+        gazetteer.select("entity_id", "alias_norm"),
+        ["entity_id", "alias_norm"], "alias_norm", "_hs_g",
+    )
+    return (
+        # gazetteer side stays broadcastable
+        m_bands.join(F.broadcast(g_bands), ["band_idx", "band_hash"])
+        .select(
+            "mention_norm",
+            "entity_id",
+            "alias_norm",
+            _jaccard("_hs_m", "_hs_g").alias("jaccard"),
         )
         .where(F.col("jaccard") >= jaccard_threshold)
+        .distinct()
         .select("mention_norm", "entity_id", "jaccard")
     )
-    return verified
 
 
 def link_mentions(

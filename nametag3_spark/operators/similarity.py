@@ -40,17 +40,6 @@ def _norm(a):
     )
 
 
-def with_unit_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize so cosine = dot (one pass, saves work in every query)."""
-    n = _norm(F.col(vec_col))
-    return df.withColumn(
-        vec_col,
-        F.when(n > 0, F.transform(F.col(vec_col), lambda v: v / n)).otherwise(
-            F.col(vec_col)
-        ),
-    )
-
-
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -189,12 +178,13 @@ def embedding_near_dup_pairs(
     table feeds three branches (hot scan + both join sides) and the
     hyperplane projections are the CPU-heavy part, so it is computed on
     full parallelism and persisted — once, not per branch."""
-    target = vectors.sparkSession.sparkContext.defaultParallelism
-    src = vectors
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target, id_col)
+    from nametag3_spark.operators.skew import spread_if_narrow
+
     buckets = _persist(
-        _bucketize_ids(src, id_col, vec_col, n_planes, n_tables, plane_hash)
+        _bucketize_ids(
+            spread_if_narrow(vectors, id_col), id_col, vec_col, n_planes,
+            n_tables, plane_hash,
+        )
     )
     hot = (
         buckets.groupBy("tbl", "bucket")
@@ -406,9 +396,9 @@ def _ivf_cells(vec_col: str, cents, nprobe: int):
 
     ONE nested higher-order expression (scores → struct sort → slice),
     not n_centroids parallel aggregate subtrees — a flat expression fan
-    blows up codegen size and compile time dominates (same rationale as
-    minhash_signature_expr). The 2-arg transform lambda is deliberate:
-    it receives (element, index), and the index IS the cell id."""
+    blows up codegen size and compile time dominates. The 2-arg transform
+    lambda is deliberate: it receives (element, index), and the index IS
+    the cell id."""
     scores = F.transform(
         cents,
         lambda c: F.aggregate(

@@ -427,15 +427,20 @@ def test_token_counts(spark):
 
 def test_minhash_idonly_equals_legacy_fat_join(spark):
     """The id-only band-join rewrite must emit exactly the pairs the
-    original fat-payload band join emitted (same bands, same verify)."""
+    original fat-payload band join emitted (same bands, same verify).
+    The reference computes its signatures independently of the kernel:
+    distinct word shingles as an array, then one nested ``transform``
+    per permutation over their xxhash64 values."""
     from pyspark.sql import functions as F
 
     from nametag3_spark.operators.dedup import (
         N_BANDS,
-        ROWS_PER_BAND,
+        N_HASHES,
+        _word_shingles,
         minhash_lsh_pairs,
-        minhash_signatures,
     )
+
+    rows_per_band = N_HASHES // N_BANDS
 
     rows = [
         (i, "alpha beta gamma delta epsilon zeta eta theta " + ("x%d" % (i % 7)))
@@ -444,7 +449,19 @@ def test_minhash_idonly_equals_legacy_fat_join(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     # legacy shape: shingles ride the band join
-    sigs = minhash_signatures(docs)
+    hs = F.transform(F.col("_sh"), lambda s: F.xxhash64(s))
+    sigs = (
+        docs.withColumn("_sh", _word_shingles("text", 3))
+        .where(F.size("_sh") > 0)
+        .select(
+            "doc_id",
+            "_sh",
+            F.transform(
+                F.sequence(F.lit(0), F.lit(N_HASHES - 1)),
+                lambda p: F.array_min(F.transform(hs, lambda h: F.xxhash64(h, p))),
+            ).alias("sig"),
+        )
+    )
     bands = sigs.select(
         "doc_id",
         "_sh",
@@ -454,7 +471,7 @@ def test_minhash_idonly_equals_legacy_fat_join(spark):
                     F.struct(
                         F.lit(b).alias("band_idx"),
                         F.xxhash64(
-                            *[F.col("sig")[b * ROWS_PER_BAND + r] for r in range(ROWS_PER_BAND)]
+                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
                         ).alias("band_hash"),
                     )
                     for b in range(N_BANDS)

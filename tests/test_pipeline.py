@@ -318,16 +318,12 @@ def test_link_mentions_best_broadcast_guard_plans(spark):
     import contextlib
     import io
 
+    from test_fuzzy_link_golden import perturbed_mentions
+
     # perturb half the surfaces so they MISS the exact gazetteer join and
     # exercise the fuzzy path (synth mentions otherwise all match exactly,
     # making `unmatched` empty and the guard trivially satisfied)
-    mentions = _mentions(spark).withColumn(
-        "mention_norm",
-        F.when(
-            F.crc32(F.col("mention_norm")) % 2 == 0,
-            F.concat(F.col("mention_norm"), F.lit("x")),
-        ).otherwise(F.col("mention_norm")),
-    )
+    mentions = perturbed_mentions(spark)
 
     def plan_of(df):
         buf = io.StringIO()

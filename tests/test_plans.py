@@ -100,6 +100,23 @@ def test_minhash_exchanges_carry_no_shingle_payload(spark):
             assert "_hs" not in a and "_sh" not in a, (first_line, a)
 
 
+def test_minhash_plans_have_no_lambdas(spark):
+    """Fuzzy linking and MinHash dedup share one explode + hash-aggregate
+    MinHash kernel: neither plan may fall back to interpreted
+    higher-order-function lambdas (nested ``transform`` signatures were
+    3.5-4.5× slower than the codegen'd aggregate)."""
+    from test_fuzzy_link_golden import perturbed_mentions
+
+    from nametag3_spark.data.synth import gazetteer_df
+    from nametag3_spark.operators.dedup import minhash_lsh_pairs
+    from nametag3_spark.operators.linking import link_mentions
+
+    linked = link_mentions(perturbed_mentions(spark), gazetteer_df(spark), fuzzy=True)
+    assert "lambdafunction" not in plan_of(linked)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    assert "lambdafunction" not in plan_of(minhash_lsh_pairs(docs, jaccard_threshold=0.5))
+
+
 def test_keep_list_corpus_scan_prunes_text(spark):
     """dedup_keep_list joins the corpus by id only — the documents scan
     must read doc_id alone (column pruning), never the text payload."""

@@ -1,12 +1,38 @@
-"""Skew/co-location levers: salted join correctness, bucketed self-join
-runs without an exchange."""
+"""Skew/co-location levers: the narrow-input spread, salted join
+correctness, bucketed self-join runs without an exchange."""
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def test_spread_if_narrow_spreads_only_narrow_inputs(spark):
+    from nametag3_spark.operators.skew import spread_if_narrow
+
+    slots = spark.sparkContext.defaultParallelism
+    narrow = spark.createDataFrame(
+        [(f"c{i % 7}", i) for i in range(200)], "conv_id string, turn_idx int"
+    ).coalesce(1)
+    spread = spread_if_narrow(narrow, "conv_id", "turn_idx", factor=2)
+    assert spread.rdd.getNumPartitions() == 2 * slots
+    assert re.search(
+        rf"hashpartitioning\(conv_id#\d+, turn_idx#\d+, {2 * slots}\)", _plan(spread)
+    )
+    assert sorted(spread.collect()) == sorted(narrow.collect())
+
+    wide = narrow.repartition(slots + 1)
+    assert spread_if_narrow(wide, "conv_id", "turn_idx", factor=2) is wide
 
 
 def test_salted_join_matches_plain_join(spark):
