@@ -325,8 +325,12 @@ def q_label_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_vocab_unk_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7: frozen-vocab lookup with <unk> fallback via broadcast left join."""
     ev = _read(spark, sf_dir, "events")
-    vocab = spark.createDataFrame(
-        [("view", 1), ("click", 2), ("signup", 3)], "event_type string, label_id int"
+    from nametag3_spark.session import local_df
+
+    vocab = local_df(
+        spark,
+        [("view", 1), ("click", 2), ("signup", 3)],
+        "event_type string, label_id int",
     )
     return (
         ev.join(F.broadcast(vocab), "event_type", "left")

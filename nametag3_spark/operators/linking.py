@@ -3,9 +3,10 @@
 Two tiers, per the north rule:
 
 1. **Broadcast exact join** — the gazetteer is small (≪ executor memory
-   even at millions of aliases), so ``F.broadcast`` keeps the big mentions
-   side shuffle-free. Match on normalized surface (lower + NFC happens
-   upstream).
+   even at millions of aliases; ``gazetteer_df`` builds it as a
+   driver-side local relation, so scanning it starts no Spark job), so
+   ``F.broadcast`` keeps the big mentions side shuffle-free. Match on
+   normalized surface (lower + NFC happens upstream).
 2. **MinHash-LSH blocking** for fuzzy candidates — character-shingle
    MinHash signatures, banded; mentions and aliases that share a band
    bucket become candidate pairs, verified by Jaccard. The signatures and

@@ -10,8 +10,9 @@ shuffle partitions sized to cores rather than the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -60,3 +61,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """A small driver-side table (``rows`` of tuples in ``ddl`` column
+    order) as a Spark local relation.
+
+    ``createDataFrame`` over a Python list parallelizes an RDD and
+    re-pickles it through a Python ``map``: every action that scans the
+    table starts Python tasks, and its size estimate is Long.MaxValue,
+    so Spark never broadcasts it on its own. A ``pyarrow.Table`` plans
+    as a ``LocalTableScan`` with real stats that runs no Spark job,
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says. Not
+    pandas: an empty pandas frame falls back to the RDD path.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, TimestampType
+
+    struct = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(struct.fields)
+    for i, field in enumerate(struct.fields):
+        if isinstance(field.dataType, TimestampType):
+            # epoch micros as the Python-list path computes them (a naive
+            # datetime is local time); Arrow would read its wall clock as UTC
+            columns[i] = [field.dataType.toInternal(v) for v in columns[i]]
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)

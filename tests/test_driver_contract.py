@@ -10,6 +10,7 @@ every other round. These tests pin that policy for BOTH parities.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 DRIVER_WINDOW = 50
@@ -30,7 +31,11 @@ def _entry():
     if "_spark_entry_module" in sys.modules:
         return sys.modules["_spark_entry_module"]
     spec = importlib.util.spec_from_file_location(
-        "_spark_entry_module", "/root/repo/__spark_entry__.py"
+        "_spark_entry_module",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "__spark_entry__.py",
+        ),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -139,3 +144,16 @@ def test_query_names_are_stable_identifiers():
     e = _entry()
     for name in e.queries():
         assert name.isidentifier() and name == name.lower()
+
+
+def test_live_round_index_and_window():
+    """The un-patched round index reads the ledgers beside the entry
+    file: a non-negative int, and the live queries() window keeps the
+    oracle-backed-before-rows-only invariant."""
+    e = _entry()
+    idx = e._driver_round_index()
+    assert isinstance(idx, int) and idx >= 0
+    o = set(e.oracle_sql())
+    flags = [name in o for name in list(e.queries())[:DRIVER_WINDOW]]
+    if False in flags:
+        assert not any(flags[flags.index(False):])

@@ -480,3 +480,91 @@ def test_pmi_and_cluster_eval_no_scale_killers(spark):
     assert "SortMergeJoin" not in p and "CartesianProduct" not in p
     p = plan_of(E.q_cluster_eval(spark, SF))
     assert "CartesianProduct" not in p and "SortMergeJoin" not in p
+
+
+def _jobs_and_plan(df) -> tuple[int, str]:
+    """Spark jobs started by ``df.collect()`` and its executed plan."""
+    sc = df.sparkSession.sparkContext
+    group = f"local_relation_probe_{id(df)}"
+    sc.setJobGroup(group, "local relation probe")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs, df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_side_tables_are_local_relations(spark):
+    """The gazetteer, the model registry and the driver-CC map are built
+    on the driver: collecting them must start no Spark job (no Python
+    worker re-pickling a parallelized list) and plan as a LocalTableScan
+    with real stats, not a Scan ExistingRDD."""
+    from nametag3_spark.data.synth import gazetteer_df
+    from nametag3_spark.operators.canonicalize import connected_components
+    from nametag3_spark.serving import ModelRegistry
+
+    reg = ModelRegistry()
+    reg.register("nametag3-multilingual-250203:nametag3-english", scorer="oracle")
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
+    )
+    for name, df in (
+        ("gazetteer", gazetteer_df(spark)),
+        ("registry", reg.alias_df(spark)),
+        ("driver_cc", connected_components(edges)),
+    ):
+        jobs, plan = _jobs_and_plan(df)
+        assert jobs == 0, (name, jobs)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
+
+
+@pytest.mark.parametrize("arrow_enabled", ["true", "false"])
+def test_local_df_types_nulls_and_plan(spark, arrow_enabled):
+    """``local_df`` keeps the declared types with no rows, round-trips
+    None cells, and stays a LocalTableScan whatever the Arrow setting."""
+    import datetime
+
+    from nametag3_spark.session import local_df
+
+    ddl = "i int, b bigint, d double, t timestamp, s string"
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, arrow_enabled)
+    try:
+        empty = local_df(spark, [], ddl)
+        assert empty.dtypes == [
+            ("i", "int"), ("b", "bigint"), ("d", "double"),
+            ("t", "timestamp"), ("s", "string"),
+        ]
+        assert empty.collect() == []
+        rows = [
+            (1, 2**40, 0.5, datetime.datetime(2024, 1, 2, 3, 4, 5), "x"),
+            (None, None, None, None, None),
+        ]
+        df = local_df(spark, rows, ddl)
+        assert [tuple(r) for r in df.collect()] == rows
+        for frame in (empty, df):
+            jobs, plan = _jobs_and_plan(frame)
+            assert jobs == 0 and "LocalTableScan" in plan, plan
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_create_dataframe_only_in_local_df():
+    """Every driver-side table goes through ``session.local_df``: a bare
+    ``createDataFrame(`` over Python rows anywhere else in the package
+    would bring back the Python-worker scan."""
+    import inspect
+    import pathlib
+
+    from nametag3_spark import session
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "nametag3_spark"
+    counts = {
+        str(path.relative_to(pkg.parent)): path.read_text().count("createDataFrame(")
+        for path in sorted(pkg.rglob("*.py"))
+    }
+    hits = {name: n for name, n in counts.items() if n}
+    assert hits == {"nametag3_spark/session.py": 1}, hits
+    assert "createDataFrame(" in inspect.getsource(session.local_df)

@@ -9,11 +9,17 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too; they inherit this env
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
